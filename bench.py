@@ -99,8 +99,8 @@ def scoring_job(spark) -> tuple[float, int]:
     pair table.  Returns (seconds, n_pairs).
 
     No sortWithinPartitions here: the native per-pair scan doesn't
-    benefit from length-sorted batches (that helps the numpy fallback's
-    padding), and the sort costs JVM CPU that competes with the kernel.
+    benefit from length-sorted batches, and the sort costs JVM CPU that
+    competes with the kernel.
     """
     from pyspark.sql import functions as F
 

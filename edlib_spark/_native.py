@@ -1,25 +1,26 @@
-"""Optional cffi-compiled inner loop for the batch distance kernel.
+"""cffi-compiled Myers scan: the batch distance kernel's only scan.
 
-The numpy batch kernel (edlib_spark.batch) amortizes Python overhead
-across pairs but still pays ~0.3-1.5ms/pair on transcript-sized strings.
-This module JIT-compiles (once, cached on disk) a small C implementation
-of the *same algorithm* — banded Myers bit-vector scan with per-pair k,
+``batch_distance`` JIT-compiles (once, cached on disk) a small C
+implementation of the banded Myers bit-vector scan with per-pair k,
 score-maintained Ukkonen band (extend while the bottom cell <= k, shrink
 while a boundary block's bottom cell >= k+64), in-flight k tightening,
 bottom-row popcount correction and band-death early exit — and runs it
-per pair directly over raw codepoint buffers (per-pair alphabet mapping
-happens in C via a generation-stamped table, like the reference's
-transformSequences but without the 256-symbol cap for BMP text).
+per pair directly over raw codepoint buffers.  Per-pair alphabet mapping
+happens in C via a generation-stamped table sized for all of Unicode
+(0x110000 entries, allocated once per batch call; only touched pages
+count toward RSS), like the reference's transformSequences but without
+its 256-symbol cap.
 
-Results are bit-identical to the numpy path (the differential tests run
-both).  This is an implementation of the published Myers 1999 bit-vector
-algorithm with Ukkonen banding written from scratch for this engine —
-NOT a copy of the reference C++ (semantics cross-checked against the
-reference suite via the Python kernels).
+Results are bit-identical to ``edlib_spark.kernel.align`` (the
+differential tests compare the two).  This is an implementation of the
+published Myers 1999 bit-vector algorithm with Ukkonen banding written
+from scratch for this engine — NOT a copy of the reference C++
+(semantics cross-checked against the reference suite via the Python
+kernels).
 
 Degrades gracefully: if cffi or a C compiler is unavailable the import
-leaves ``lib = None`` and callers keep the pure-numpy path; pairs with
-non-BMP codepoints return a sentinel and are re-scored by numpy.
+warns once and leaves ``lib = None``; ``batch.batch_edit_distance`` then
+scores every pair with the pure-Python ``kernel.align``.
 """
 
 from __future__ import annotations
@@ -27,18 +28,38 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
+import warnings
 
-UNSUPPORTED = -2147483648  # INT32_MIN sentinel: pair needs the numpy path
+# INT32_MIN sentinel: the pair was not scored because a scratch
+# allocation failed (or a raw buffer holds a value past U+10FFFF, which
+# no Python str can); callers re-score it with kernel.align
+UNSUPPORTED = -2147483648
 
 _SOURCE = r"""
 #include <stdint.h>
 #include <stdlib.h>
 #include <string.h>
+#include <sys/mman.h>
 
 typedef uint64_t word;
 #define WBITS 64
-#define BMP 65536
+#define NCODES 0x110000  /* every Unicode codepoint */
 #define UNSUPPORTED INT32_MIN
+
+/* The codepoint tables span all of Unicode (13 MB).  mmap hands out
+   fresh zero pages on every call, so only the pages a batch touches
+   become resident.  calloc would not: once glibc's mmap threshold has
+   risen past this size it serves the tables from the heap and
+   zero-fills all of them. */
+static void *table_alloc(size_t bytes) {
+    void *p = mmap(NULL, bytes, PROT_READ | PROT_WRITE,
+                   MAP_PRIVATE | MAP_ANONYMOUS, -1, 0);
+    return p == MAP_FAILED ? NULL : p;
+}
+
+static void table_free(void *p, size_t bytes) {
+    if (p) munmap(p, bytes);
+}
 
 /* One Myers bit-parallel block step; returns carry in {-1,0,1}. */
 static inline int step_block(word *pv, word *mv, word eq, int hin) {
@@ -58,7 +79,7 @@ static inline int step_block(word *pv, word *mv, word eq, int hin) {
 }
 
 typedef struct {
-    int32_t *map;       /* BMP codepoint -> dense symbol id */
+    int32_t *map;       /* codepoint -> dense symbol id */
     int64_t *stamp;     /* generation stamps (avoids per-pair memset) */
     int64_t gen;
     int32_t *qs, *ts;   /* recoded scratch */
@@ -71,7 +92,7 @@ typedef struct {
 
 /* Distance for one pair of raw codepoint sequences.
    mode: 0=NW, 1=SHW, 2=HW.  Returns distance, -1 if > k, or
-   UNSUPPORTED when a codepoint is outside the BMP. */
+   UNSUPPORTED when a value is past U+10FFFF or scratch is short. */
 static int32_t pair_distance(const uint32_t *q, int64_t qlen,
                              const uint32_t *t, int64_t tlen,
                              int64_t k, int mode, scratch *s) {
@@ -92,14 +113,14 @@ static int32_t pair_distance(const uint32_t *q, int64_t qlen,
     int32_t sigma = 0;
     for (int64_t i = 0; i < qlen; i++) {
         uint32_t c = q[i];
-        if (c >= BMP) return UNSUPPORTED;
+        if (c >= NCODES) return UNSUPPORTED;
         if (s->stamp[c] != s->gen) { s->stamp[c] = s->gen;
                                      s->map[c] = sigma++; }
         s->qs[i] = s->map[c];
     }
     for (int64_t i = 0; i < tlen; i++) {
         uint32_t c = t[i];
-        if (c >= BMP) return UNSUPPORTED;
+        if (c >= NCODES) return UNSUPPORTED;
         if (s->stamp[c] != s->gen) { s->stamp[c] = s->gen;
                                      s->map[c] = sigma++; }
         s->ts[i] = s->map[c];
@@ -121,7 +142,7 @@ static int32_t pair_distance(const uint32_t *q, int64_t qlen,
         memcpy(s->peq2, peq, (size_t)(sigma * nb) * sizeof(word));
         for (int64_t e = 0; e < s->n_eq; e++) {
             uint32_t a = s->eqa[e], c = s->eqb[e];
-            if (a >= BMP || c >= BMP) continue;
+            if (a >= NCODES || c >= NCODES) continue;
             if (s->stamp[a] != s->gen || s->stamp[c] != s->gen) continue;
             int64_t ca = s->map[a], cb = s->map[c];
             if (ca == cb) continue;
@@ -681,12 +702,12 @@ int batch_distance(const uint32_t *qbuf, const int64_t *qstart,
     }
     scratch s;
     s.cap_nb = max_nb;
-    s.cap_sigma = BMP;
+    s.cap_sigma = NCODES;
     s.cap_q = max_q; s.cap_t = max_t;
     s.gen = 0;
     s.eqa = eqa; s.eqb = eqb; s.n_eq = n_eq;
-    s.map = (int32_t *)malloc(BMP * sizeof(int32_t));
-    s.stamp = (int64_t *)calloc(BMP, sizeof(int64_t));
+    s.map = (int32_t *)table_alloc(NCODES * sizeof(int32_t));
+    s.stamp = (int64_t *)table_alloc(NCODES * sizeof(int64_t));
     s.qs = (int32_t *)malloc((size_t)max_q * sizeof(int32_t));
     s.ts = (int32_t *)malloc((size_t)max_t * sizeof(int32_t));
     /* peq sized for 512 symbols; larger alphabets grow on demand */
@@ -700,7 +721,9 @@ int batch_distance(const uint32_t *qbuf, const int64_t *qstart,
     s.score = (int64_t *)malloc((size_t)max_nb * sizeof(int64_t));
     if (!s.map || !s.stamp || !s.qs || !s.ts || !s.peq || !s.pv || !s.mv
         || !s.score || (n_eq > 0 && !s.peq2)) {
-        free(s.map); free(s.stamp); free(s.qs); free(s.ts); free(s.peq);
+        table_free(s.map, NCODES * sizeof(int32_t));
+        table_free(s.stamp, NCODES * sizeof(int64_t));
+        free(s.qs); free(s.ts); free(s.peq);
         free(s.peq2); free(s.pv); free(s.mv); free(s.score);
         return -1;
     }
@@ -708,7 +731,7 @@ int batch_distance(const uint32_t *qbuf, const int64_t *qstart,
         int64_t ql = qlens[i];
         int64_t tl = tlens[i];
         /* alphabet can't exceed ql + tl; grow peq when needed */
-        int64_t need = ql + tl < BMP ? ql + tl : BMP;
+        int64_t need = ql + tl < NCODES ? ql + tl : NCODES;
         if (need > peq_sigma) {
             /* commit the new capacity only after EVERY realloc
                succeeds: on failure the old (smaller) buffers stay
@@ -732,7 +755,9 @@ int batch_distance(const uint32_t *qbuf, const int64_t *qstart,
         out[i] = pair_distance(qbuf + qstart[i], ql, tbuf + tstart[i],
                                tl, ks[i], mode, &s);
     }
-    free(s.map); free(s.stamp); free(s.qs); free(s.ts); free(s.peq);
+    table_free(s.map, NCODES * sizeof(int32_t));
+    table_free(s.stamp, NCODES * sizeof(int64_t));
+    free(s.qs); free(s.ts); free(s.peq);
     free(s.peq2); free(s.pv); free(s.mv); free(s.score);
     return 0;
 }
@@ -766,7 +791,8 @@ def _build():
     global lib, ffi
     try:
         from cffi import FFI
-    except ImportError:
+    except ImportError as exc:
+        _warn_unavailable(exc)
         return
     try:
         tag = hashlib.sha256(_SOURCE.encode()).hexdigest()[:12]
@@ -783,10 +809,11 @@ def _build():
             # publish the .so: 32 Python UDF workers import this module
             # near-simultaneously on a cold cache, and concurrent cffi
             # compiles into one dir race on the output file (a reader
-            # can dlopen a half-written .so and silently fall back to
-            # numpy).  Concurrent builds waste CPU but every publish is
-            # atomic; session.get_spark pre-imports this module in the
-            # driver so the normal path is ONE compile, before workers.
+            # can dlopen a half-written .so and fall back to the
+            # Python kernel).  Concurrent builds waste CPU but every
+            # publish is atomic; session.get_spark pre-imports this
+            # module in the driver so the normal path is ONE compile,
+            # before workers.
             builddir = os.path.join(cache, f"build-{os.getpid()}")
             os.makedirs(builddir, exist_ok=True)
             builder.set_source(modname, _SOURCE,
@@ -805,9 +832,17 @@ def _build():
         spec.loader.exec_module(mod)
         lib = mod.lib
         ffi = mod.ffi
-    except Exception:  # noqa: BLE001 — any failure => numpy fallback
+    except Exception as exc:  # noqa: BLE001 — any failure => fallback
         lib = None
         ffi = None
+        _warn_unavailable(exc)
+
+
+def _warn_unavailable(exc: BaseException) -> None:
+    warnings.warn(
+        f"edlib_spark C scan unavailable ({exc!r}); edit distances fall "
+        "back to the pure-Python kernel.align, roughly 100x slower",
+        RuntimeWarning, stacklevel=3)
 
 
 _build()
@@ -819,8 +854,9 @@ def native_batch_distance(q_flat, q_start, q_lens, t_flat, t_start,
     per-pair (start, len) views — no copying or recoding in Python.
     ``equalities``: optional (eqa, eqb) pair of uint32 codepoint arrays
     (additional-equality pairs applied to every pair in the batch).
-    Returns int32 results (UNSUPPORTED sentinel per unhandled pair), or
-    None when the native library is unavailable."""
+    Returns int32 results (UNSUPPORTED sentinel per pair left
+    unscored), or None when the native library is unavailable or its
+    scratch allocation failed."""
     import numpy as np
 
     if lib is None:

@@ -3457,7 +3457,12 @@ def _sql_training_stages() -> str:
         FROM exd)"""
 
 
-def _sql_doc_training_corpus(edges_sql: str | None = None) -> str:
+def _sql_training_kept(edges_sql: str | None = None) -> str:
+    """The CTE chain both training oracles share: _sql_training_stages,
+    the 4-gram Jaccard >= 0.8 edge join ``e`` (``edges_sql`` swaps in
+    the certificate edge table at cross-scale), recursive-CTE
+    components ``comp``, and ``kept`` — each component's min doc_id
+    plus every exact-dedup doc without an edge."""
     edges = edges_sql or """
         SELECT a.doc_id AS id_a, b.doc_id AS id_b
         FROM grams a JOIN grams b ON a.doc_id < b.doc_id
@@ -3465,8 +3470,7 @@ def _sql_doc_training_corpus(edges_sql: str | None = None) -> str:
           AND len(b.g) * 100 >= 80 * len(a.g)
           AND len(list_intersect(a.g, b.g)) * 100
               >= 80 * len(list_distinct(list_concat(a.g, b.g)))"""
-    return f"""
-    WITH RECURSIVE {_sql_training_stages()},
+    return f"""{_sql_training_stages()},
     e AS ({edges}),
     sym AS (SELECT id_a AS u, id_b AS v FROM e
             UNION SELECT id_b, id_a FROM e),
@@ -3475,12 +3479,20 @@ def _sql_doc_training_corpus(edges_sql: str | None = None) -> str:
         UNION
         SELECT s.u AS node, r.lab AS lab
         FROM sym s JOIN reach r ON s.v = r.node),
-    comp AS (SELECT node, min(lab) AS root FROM reach GROUP BY node)
+    comp AS (SELECT node, min(lab) AS root FROM reach GROUP BY node),
+    kept AS (
+        SELECT d.doc_id
+        FROM exd d LEFT JOIN comp ON d.doc_id = comp.node
+        WHERE coalesce(comp.root, d.doc_id) = d.doc_id)"""
+
+
+def _sql_doc_training_corpus(edges_sql: str | None = None) -> str:
+    return f"""
+    WITH RECURSIVE {_sql_training_kept(edges_sql)}
     SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
            CAST(d.n_chars AS BIGINT) AS n_chars,
            CAST(d.n_tokens AS BIGINT) AS n_tokens
-    FROM exd d LEFT JOIN comp ON d.doc_id = comp.node
-    WHERE coalesce(comp.root, d.doc_id) = d.doc_id
+    FROM exd d JOIN kept USING (doc_id)
     """
 
 
@@ -3518,32 +3530,10 @@ def training_funnel_documents(spark: SparkSession,
 
 def _sql_training_funnel(edges_sql: str | None = None) -> str:
     """Funnel oracle: the doc_training_corpus oracle's own stage CTEs
-    (quality gate, exact dedup, gram sets, edge join, recursive-CTE
-    components) with one count per stage.  ``edges_sql`` swaps in the
-    certificate edge table at cross-scale, exactly as
-    _sql_doc_training_corpus does."""
-    edges = edges_sql or """
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM grams a JOIN grams b ON a.doc_id < b.doc_id
-        WHERE len(a.g) * 100 >= 80 * len(b.g)
-          AND len(b.g) * 100 >= 80 * len(a.g)
-          AND len(list_intersect(a.g, b.g)) * 100
-              >= 80 * len(list_distinct(list_concat(a.g, b.g)))"""
+    (_sql_training_kept: quality gate, exact dedup, gram sets, edge
+    join, recursive-CTE components) with one count per stage."""
     return f"""
-    WITH RECURSIVE {_sql_training_stages()},
-    e AS ({edges}),
-    sym AS (SELECT id_a AS u, id_b AS v FROM e
-            UNION SELECT id_b, id_a FROM e),
-    reach AS (
-        SELECT u AS node, u AS lab FROM (SELECT DISTINCT u FROM sym)
-        UNION
-        SELECT s.u AS node, r.lab AS lab
-        FROM sym s JOIN reach r ON s.v = r.node),
-    comp AS (SELECT node, min(lab) AS root FROM reach GROUP BY node),
-    kept AS (
-        SELECT d.doc_id
-        FROM exd d LEFT JOIN comp ON d.doc_id = comp.node
-        WHERE coalesce(comp.root, d.doc_id) = d.doc_id)
+    WITH RECURSIVE {_sql_training_kept(edges_sql)}
     SELECT CAST(0 AS BIGINT) AS stage, 'raw' AS stage_name,
            CAST((SELECT count(*) FROM documents) AS BIGINT) AS n_docs
     UNION ALL

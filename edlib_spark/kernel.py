@@ -10,11 +10,12 @@ own golden vectors (reference tests: test/runTests.cpp,
 bindings/python/test.py).
 
 The hot distributed path does NOT call this module per row — see
-``edlib_spark.batch`` for the Arrow-batch vectorized distance kernel.
-This module is used for:
+``edlib_spark.batch`` for the Arrow-batch distance entry point over the
+C scan.  This module is used for:
   * task='locations' / task='path' on the (few) pairs that survive the
     match threshold,
   * differential testing of the batch kernel,
+  * scoring batch pairs when the C scan is unavailable (no compiler),
   * the public ``align()`` API mirroring the reference Python binding
     (reference: bindings/python/edlib.pyx:56-155).
 
@@ -71,7 +72,7 @@ def encode_pair(query, target, additional_equalities=None, max_alphabet=256):
     symbols get codes in order of first occurrence, query first.
 
     ``max_alphabet=None`` lifts the reference's 256-unique-symbol cap (our
-    numpy kernels are not byte-bound); the default keeps reference parity.
+    kernels are not byte-bound); the default keeps reference parity.
     """
     symbol_code: dict = {}
     q_codes = np.empty(len(query), dtype=np.int64)

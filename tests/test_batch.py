@@ -1,5 +1,7 @@
 """Differential tests: batch-vectorized kernel vs single-pair kernel/oracle."""
 
+from types import SimpleNamespace
+
 import numpy as np
 import pytest
 
@@ -103,6 +105,10 @@ def test_batch_unicode():
     got = batch_edit_distance(qs, ts, mode="NW", k=-1)
     assert got[0] == 5
     assert got[1] == 2
+    # a lone surrogate is a legal str element: one symbol, like the kernel
+    qs, ts = ["\ud800a", "x\udfff\ud800"], ["a", "x\ud800"]
+    assert batch_edit_distance(qs, ts, mode="NW", k=-1).tolist() == \
+        [align(q, t)["editDistance"] for q, t in zip(qs, ts)] == [1, 1]
 
 
 def test_batch_mixed_block_counts_one_call():
@@ -125,18 +131,16 @@ def test_batch_empty_ignores_k():
     for mode, exp in (("NW", [6, 6, 0, 6]),
                       ("SHW", [0, 6, 0, 0]),
                       ("HW", [0, 6, 0, 0])):
-        for use_native in (True, False):
-            got = batch_edit_distance(qs, ts, mode=mode, k=2,
-                                      use_native=use_native)
-            assert got.tolist() == exp, (mode, use_native)
-            for q, t, e in zip(qs, ts, exp):
-                assert align(q or "", t or "", mode=mode,
-                             k=2)["editDistance"] == e
+        got = batch_edit_distance(qs, ts, mode=mode, k=2)
+        assert got.tolist() == exp, mode
+        for q, t, e in zip(qs, ts, exp):
+            assert align(q or "", t or "", mode=mode,
+                         k=2)["editDistance"] == e
 
 
 def test_batch_equalities_match_kernel():
-    """Batched additional-equality scoring (native + numpy) vs the
-    exact kernel, covering case-folding and non-transitive wildcards."""
+    """Batched additional-equality scoring vs the exact kernel,
+    covering case-folding and non-transitive wildcards."""
     rng = np.random.default_rng(7)
     eqs_case = [(chr(c), chr(c).upper())
                 for c in range(ord("a"), ord("z") + 1)]
@@ -153,20 +157,21 @@ def test_batch_equalities_match_kernel():
             want = [align(q, t, mode=mode,
                           additionalEqualities=eqs)["editDistance"]
                     for q, t in zip(qs, ts)]
-            for use_native in (True, False):
-                got = batch_edit_distance(qs, ts, mode=mode, k=-1,
-                                          use_native=use_native,
-                                          equalities=eqs)
-                assert got.tolist() == want, (mode, use_native)
+            got = batch_edit_distance(qs, ts, mode=mode, k=-1,
+                                      equalities=eqs)
+            assert got.tolist() == want, mode
 
 
 @pytest.mark.parametrize("mode", MODES)
 def test_batch_mixed_k_nonbmp_chunk_grouping(mode):
-    """Mixed per-pair k on non-BMP text (numpy path): the geometric
-    k-magnitude chunk grouping must not change results — every pair
-    matches the exact kernel regardless of which chunk/band served it."""
+    """Mixed per-pair k on non-BMP text: the C scan takes every Unicode
+    codepoint, so no astral pair comes back UNSUPPORTED, and every pair
+    matches the exact kernel."""
+    from edlib_spark import _native
+    from edlib_spark.batch import encode_flat
+
     rng = np.random.default_rng(321)
-    alpha = "acg\U0001F600"  # non-BMP symbol forces the numpy lane
+    alpha = "acg\U0001F600"  # a non-BMP symbol in every alphabet
     qs, ts, ks = [], [], []
     for i in range(120):
         qlen = int(rng.integers(0, 300))
@@ -186,9 +191,66 @@ def test_batch_mixed_k_nonbmp_chunk_grouping(mode):
         ks.append(k)
     want = [align(q, t, mode=mode, k=k)["editDistance"]
             for q, t, k in zip(qs, ts, ks)]
-    got = batch_edit_distance(qs, ts, mode, np.array(ks),
-                              use_native=False)
-    assert got.tolist() == want
+    q_buf, q_start, q_lens = encode_flat(qs)
+    t_buf, t_start, t_lens = encode_flat(ts)
+    native = _native.native_batch_distance(
+        q_buf, q_start, q_lens, t_buf, t_start, t_lens,
+        np.array(ks, dtype=np.int64), mode)
+    assert native is not None
+    assert not (native == _native.UNSUPPORTED).any()
+    assert native.tolist() == want
+    assert batch_edit_distance(qs, ts, mode, np.array(ks)).tolist() == want
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_batch_fallback_without_c_scan_matches_kernel(mode, monkeypatch):
+    """With no C scan (``_native.lib`` is None, as on a host without a
+    compiler) every pair is scored by kernel.align: bounded and
+    unbounded k, empty sides, additional equalities and non-BMP text
+    must all match the exact kernel."""
+    from edlib_spark import _native
+
+    monkeypatch.setattr(_native, "lib", None)
+    rng = np.random.default_rng(99)
+    alpha = "acgt\U0001F600\U0001F680"
+    qs, ts, ks = ["", "ac", None], ["tg", "", "a\U0001F600"], [1, -1, 0]
+    for i in range(60):
+        q = "".join(alpha[j] for j in rng.integers(
+            0, len(alpha), rng.integers(0, 150)))
+        t = list(q)
+        for p in rng.integers(0, max(len(q), 1), 4):
+            if q:
+                t[p] = alpha[int(rng.integers(0, len(alpha)))]
+        if i % 2 == 0:  # an unrelated target
+            t = [alpha[j] for j in rng.integers(
+                0, len(alpha), rng.integers(0, 200))]
+        qs.append(q)
+        ts.append("".join(t))
+        ks.append(int(rng.choice([-1, 0, 3, 20, 90])))
+    for eqs in (None, [("a", "\U0001F600"), ("c", "g")]):
+        want = [align(q or "", t or "", mode=mode, k=k,
+                      additionalEqualities=eqs,
+                      max_alphabet=None)["editDistance"]
+                for q, t, k in zip(qs, ts, ks)]
+        got = batch_edit_distance(qs, ts, mode, np.array(ks),
+                                  equalities=eqs)
+        assert got.tolist() == want, (mode, eqs)
+
+
+def test_native_build_failure_warns(monkeypatch):
+    """A C scan that cannot be built must say so once, with the cause,
+    instead of silently dropping every distance to kernel.align."""
+    from edlib_spark import _native
+
+    monkeypatch.setattr(_native, "lib", _native.lib)
+    monkeypatch.setattr(_native, "ffi", _native.ffi)
+
+    def broken(*_args, **_kwargs):
+        raise OSError("no compiler here")
+    monkeypatch.setattr(_native, "hashlib", SimpleNamespace(sha256=broken))
+    with pytest.warns(RuntimeWarning, match="no compiler here"):
+        _native._build()
+    assert _native.lib is None
 
 
 def test_equalities_int_codepoints_and_validation():
@@ -242,11 +304,8 @@ def test_batch_tight_k_long_near_identical(mode):
         for t in variants:
             for k in (0, 1, 2, 3, 5, 16, 63, 64):
                 want = align(base, t, mode=mode, k=k)["editDistance"]
-                for use_native in (True, False):
-                    got = batch_edit_distance([base], [t], mode, k,
-                                              use_native=use_native)
-                    assert got[0] == want, (L, len(t), k, use_native,
-                                            got[0], want)
+                got = batch_edit_distance([base], [t], mode, k)
+                assert got[0] == want, (L, len(t), k, got[0], want)
 
 
 def test_native_fill_matches_python_scan():

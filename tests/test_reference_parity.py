@@ -204,10 +204,9 @@ def test_multiblock_parity_vs_reference_binary(probe):
 def test_batched_equality_parity_vs_reference_binary(probe):
     """The BATCH kernel with additional equalities vs the reference
     binary: one batch call per (mode, equality set) so the
-    equality-aware Peq planes run through the chunked hot path — both
-    the native (cffi) and numpy lanes.  Includes a non-transitive set
-    ('a'~'c','a'~'g','a'~'t' without c~g) that a recode-based
-    implementation could not express."""
+    equality-aware Peq planes run through the C scan.  Includes a
+    non-transitive set ('a'~'c','a'~'g','a'~'t' without c~g) that a
+    recode-based implementation could not express."""
     from edlib_spark.batch import batch_edit_distance
     eq_sets = {"ac": [("a", "c")],
                "agct": [("a", "g"), ("c", "t")],
@@ -229,23 +228,20 @@ def test_batched_equality_parity_vs_reference_binary(probe):
                 ks.append(k)
                 cases.append((mode, "distance", k, eqs, q, t))
             want = [w[0] for w in _run_reference(probe, cases)]
-            for use_native in (True, False):
-                got = batch_edit_distance(
-                    qs, ts, mode, np.array(ks), use_native=use_native,
-                    equalities=pairs)
-                assert got.tolist() == want, (mode, eqs, use_native)
+            got = batch_edit_distance(qs, ts, mode, np.array(ks),
+                                      equalities=pairs)
+            assert got.tolist() == want, (mode, eqs)
 
 
 def test_native_tight_k_multiblock_parity_vs_reference_binary(probe):
     """The round-2 bug class, pinned against the COMPILED reference:
     tight k (< 64, including k smaller than the true distance) on
     multi-block queries (3-7 blocks of 64), with and without equality
-    pairs, routed explicitly through batch_edit_distance's native scan
-    AND the numpy lane.  Targets are near-identical mutations of the
-    query so true distances cluster around the k boundary — the regime
-    where the original native band-extension logic returned -1 for true
-    distances <= k.  This suite fails if the C scan ever drifts from
-    the reference again."""
+    pairs, routed through batch_edit_distance's C scan.  Targets are
+    near-identical mutations of the query so true distances cluster
+    around the k boundary — the regime where the original native
+    band-extension logic returned -1 for true distances <= k.  This
+    suite fails if the C scan ever drifts from the reference again."""
     from edlib_spark.batch import batch_edit_distance
     rng = np.random.default_rng(20260817)
     alpha = "acgt"
@@ -278,8 +274,6 @@ def test_native_tight_k_multiblock_parity_vs_reference_binary(probe):
                 ks.append(k)
                 cases.append((mode, "distance", k, eqs, q, t))
             want = [w[0] for w in _run_reference(probe, cases)]
-            for use_native in (True, False):
-                got = batch_edit_distance(
-                    qs, ts, mode, np.array(ks), use_native=use_native,
-                    equalities=pairs)
-                assert got.tolist() == want, (mode, eqs, use_native)
+            got = batch_edit_distance(qs, ts, mode, np.array(ks),
+                                      equalities=pairs)
+            assert got.tolist() == want, (mode, eqs)

@@ -214,12 +214,10 @@ def test_top_n_best_caps_n(spark):
 
 def test_edit_distance_nonbmp_spark_lane_handoff(spark):
     """Astral-plane text through the REAL Spark scorer surface: the C
-    lane returns its UNSUPPORTED sentinel for non-BMP codepoints and
-    the batch dispatcher re-scores exactly those pairs on the numpy
-    lane.  test_batch.py pins that handoff at the batch API; this pins
-    it at the DataFrame level (edit_distance UDF, mixed BMP/astral
-    rows sharing one Arrow batch), NW and HW, unbounded and tight k,
-    against the exact kernel per pair."""
+    scan takes every Unicode codepoint, so mixed BMP/astral rows sharing
+    one Arrow batch all stay on it (native_batch_distance returns no
+    UNSUPPORTED for them), and the edit_distance UDF matches the exact
+    kernel per pair, NW and HW, unbounded and tight k."""
     import numpy as np
 
     from edlib_spark import kernel
@@ -258,6 +256,62 @@ def test_edit_distance_nonbmp_spark_lane_handoff(spark):
                 kernel.align(q, t, mode="HW")["editDistance"],
                 kernel.align(q, t, mode="NW", k=5)["editDistance"])
         assert got[i] == want, (i, q, t)
+    _assert_c_scan_takes_all([q for _, q, _ in rows], [t for *_, t in rows])
+
+
+def _assert_c_scan_takes_all(qs, ts):
+    """No pair leaves the C scan: at a tight k and at the first bounds
+    of the dynamic-k rounds, it returns a result for every pair, never
+    its UNSUPPORTED sentinel."""
+    import numpy as np
+
+    from edlib_spark import _native
+    from edlib_spark.batch import encode_flat
+
+    q_buf, q_start, q_lens = encode_flat(qs)
+    t_buf, t_start, t_lens = encode_flat(ts)
+    for mode in ("NW", "HW"):
+        for k in (5, 9, 64, 128):
+            got = _native.native_batch_distance(
+                q_buf, q_start, q_lens, t_buf, t_start, t_lens,
+                np.full(len(qs), k, dtype=np.int64), mode)
+            assert got is not None
+            assert not (got == _native.UNSUPPORTED).any(), (mode, k)
+
+
+def test_edit_distance_hostile_rows(spark):
+    """Hostile rows through the Spark edit_distance UDF: null and empty
+    text, astral-only text, and a 70k-character document against a
+    copy with isolated planted substitutions.  Distances are exact by
+    construction and every pair stays on the C scan."""
+    import numpy as np
+
+    rng = np.random.default_rng(70_000)
+    doc = "".join(chr(c) for c in rng.integers(97, 123, 70_000))
+    planted = list(doc)
+    for p in range(1_000, 70_000, 7_000):  # 10 isolated substitutions
+        planted[p] = "Z"
+    planted = "".join(planted)
+    astral = "\U0001F600\U0001F680\U00020000\U0010FFFF"
+    rows = [
+        (0, None, "abc", 3), (1, "abcd", None, 4), (2, None, None, 0),
+        (3, "", "", 0), (4, "", "xyz", 3),
+        (5, astral, astral, 0), (6, astral, astral[::-1], 4),
+        (7, astral * 3, astral[:2] + "\U0001F601" + astral[3:], 9),
+        (8, doc, planted, 10), (9, planted, doc, 10), (10, doc, doc, 0),
+    ]
+    df = spark.createDataFrame(
+        [r[:3] for r in rows], "i int, q string, t string")
+    got = {r["i"]: (r["d"], r["d_k"]) for r in
+           df.withColumn("d", edit_distance(F.col("q"), F.col("t"),
+                                            "NW", -1))
+             .withColumn("d_k", edit_distance(F.col("q"), F.col("t"),
+                                              "NW", 9))
+             .collect()}
+    for i, _, _, want in rows:
+        assert got[i] == (want, want if want <= 9 else -1), i
+    _assert_c_scan_takes_all([r[1] or "" for r in rows],
+                             [r[2] or "" for r in rows])
 
 
 def test_align_expr_matches_kernel_differential(spark):
